@@ -30,6 +30,9 @@ the pipeline end-to-end, not just row counts.
 
 from __future__ import annotations
 
+import logging
+import threading
+
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
@@ -41,6 +44,8 @@ from kinesis_stream_spark.functions.hashing import (
     tokens,
 )
 from kinesis_stream_spark.sources.batch import spread
+
+log = logging.getLogger(__name__)
 
 DEFAULT_NUM_HASHES = 16
 DEFAULT_BANDS = 4
@@ -509,22 +514,40 @@ def exact_dedup_incremental(
 # --- duplicate-cluster resolution (connected components) ----------------------
 
 
+#: Number of :func:`_release_local_checkpoint` calls that raised in this
+#: process. Each one left a checkpoint's blocks resident until session end.
+release_failures = 0
+_release_failures_lock = threading.Lock()
+
+
 def _release_local_checkpoint(df: DataFrame) -> None:
     """Free the block-manager storage behind a ``localCheckpoint()``-ed
     DataFrame whose data has been fully consumed downstream.
 
     ``Dataset.unpersist()`` only covers cache-manager entries (verified:
     it leaves localCheckpoint blocks resident), so reach through the
-    plan's ``LogicalRDD`` to the persisted RDD itself. Best-effort by
-    design — py4j internals; a miss just leaves the blocks held until
-    session end, which is the pre-fix behavior.
+    plan's ``LogicalRDD`` to the persisted RDD itself. A plan that is not
+    a ``LogicalRDD`` holds no checkpoint: nothing to free. Best-effort by
+    design — py4j internals; a failure only leaves the blocks held until
+    session end, so it is counted in ``release_failures`` (and logged the
+    first time) instead of raised.
     """
+    global release_failures
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getName().endswith("LogicalRDD"):
             plan.rdd().unpersist(False)
     except Exception:
-        pass
+        with _release_failures_lock:
+            release_failures += 1
+            first = release_failures == 1
+        if first:
+            log.warning(
+                "could not release a local checkpoint; its blocks stay "
+                "resident until session end (further failures are only "
+                "counted in dedup.release_failures)",
+                exc_info=True,
+            )
 
 
 def _label_sum() -> Column:

@@ -15,14 +15,18 @@ ack is documented honestly here: a crash mid-batch loses that whole batch
 
 ``foreach_batch_commit_flow`` additionally threads the parity
 CheckpointTracker through a batch, reproducing the reference's
-track→process→checkpoint ack path per shard inside one micro-batch.
+track→process→checkpoint ack path per shard inside one micro-batch. The
+per-shard range summary it needs runs concurrently with the user's
+processing, so a batch costs about max(summary, process), not their sum.
 """
 
 from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -78,6 +82,13 @@ def _shard_range_summaries(df: DataFrame) -> list:
         )
         .collect()
     )
+
+
+def _endpoints(row) -> list[SequenceNumber]:
+    """The (lo, hi) sequence numbers of a range-summary row, once each."""
+    lo = SequenceNumber(int(row["lo"]["seq"]), int(row["lo"]["sub"]))
+    hi = SequenceNumber(int(row["hi"]["seq"]), int(row["hi"]["sub"]))
+    return [lo] if lo == hi else [lo, hi]
 
 
 def run_at_least_once(
@@ -191,6 +202,27 @@ def foreach_batch_commit_flow(
     feeds it a batch-granular range. The durable commit at scale is
     Spark's offset log (run_at_least_once).
 
+    The summary's Spark jobs run on a helper thread while ``process_fn``
+    runs, so they overlap the batch's own jobs instead of preceding
+    them. The helper inherits the calling thread's local properties
+    (PySpark's default pinned-thread mode), so the jobs stay in the
+    query's job group: ``query.stop()`` cancels them and the status
+    store attributes them to the stream. The flow waits for the summary
+    before returning, also when ``process_fn`` raises, so no job
+    outlives the batch. Tracking therefore happens after both have
+    settled, just before the acks rather than before ``process_fn``.
+    No caller can tell: the tracker's state for these shards changes
+    only through this flow's own track/ack/checkpoint calls, and they
+    keep their order.
+
+    Endpoints at or below a shard's ``last_checkpoint`` are neither
+    tracked nor acked, and a shard with none above it skips its cycle.
+    The file transport can list a file late (modification-time ties),
+    so a batch's range may start at or below what is already committed;
+    tracked, such an endpoint would sit at the head of the queue with
+    its ack ignored (the tracker drops acks at or below the checkpoint),
+    and the shard would never checkpoint again.
+
     Checkpoint failures go through the O7 taxonomy
     (`RecordProcessorImpl.scala:126-148` via streaming/errors.py):
     transient → log + continue, lease lost → stop tracking that shard
@@ -207,21 +239,24 @@ def foreach_batch_commit_flow(
     """
 
     def run(df: DataFrame, batch_id: int) -> None:
-        shard_seqs = _shard_range_summaries(df)
-
-        def seqs_of(row) -> list[SequenceNumber]:
-            lo = SequenceNumber(int(row["lo"]["seq"]), int(row["lo"]["sub"]))
-            hi = SequenceNumber(int(row["hi"]["seq"]), int(row["hi"]["sub"]))
-            return [lo] if lo == hi else [lo, hi]
-
-        for row in shard_seqs:
-            tracker.start_shard(row["shardId"])
-            tracker.track(row["shardId"], seqs_of(row))
-        process_fn(df)
-
-        def ack_cycle(row) -> None:
+        # the helper keeps the query's job group; leaving the pool waits
+        # for the summary, also when process_fn raises
+        summarize = inheritable_thread_target(df.sparkSession)(_shard_range_summaries)
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            summary = pool.submit(summarize, df)
+            process_fn(df)
+        cycles = []
+        for row in summary.result():
             shard = row["shardId"]
-            for s in seqs_of(row):
+            last = tracker.start_shard(shard).last_checkpoint
+            # tracked, an endpoint at or below the checkpoint would stall the shard
+            seqs = [s for s in _endpoints(row) if last is None or s > last]
+            if seqs:
+                tracker.track(shard, seqs)
+                cycles.append((shard, seqs))
+
+        def ack_cycle(shard: str, seqs: list[SequenceNumber]) -> None:
+            for s in seqs:
                 tracker.process(shard, s)
             checkpoint_with_taxonomy(
                 lambda: tracker.checkpoint_if_needed(shard, checkpointer(shard), force=True),
@@ -230,13 +265,11 @@ def foreach_batch_commit_flow(
             )
 
         if parallelism <= 1:
-            for row in shard_seqs:
-                ack_cycle(row)
+            for cycle in cycles:
+                ack_cycle(*cycle)
         else:
-            from concurrent.futures import ThreadPoolExecutor
-
             with ThreadPoolExecutor(max_workers=parallelism) as pool:
-                futures = [pool.submit(ack_cycle, row) for row in shard_seqs]
+                futures = [pool.submit(ack_cycle, *cycle) for cycle in cycles]
                 errors = [f.exception() for f in futures]
             for err in errors:
                 if err is not None:

@@ -28,6 +28,18 @@ def pytest_configure(config):
     )
 
 
+def pytest_report_collectionfinish(config, start_path, items):
+    # a header line, printed under "collected N items" even with -q; the
+    # pytest_report_header hook runs before collection, so it cannot count
+    n_slow = sum("slow" in item.keywords for item in items)
+    if os.environ.get("SPARK_GRAFT_SLOW_TESTS"):
+        return f"slow tier: enabled ({n_slow} slow tests run)"
+    return (
+        f"slow tier: {n_slow} slow tests skipped by default "
+        "(set SPARK_GRAFT_SLOW_TESTS=1 to run them)"
+    )
+
+
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_SLOW_TESTS"):
         return

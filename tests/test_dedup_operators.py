@@ -188,6 +188,55 @@ def test_connected_components_releases_checkpoint_blocks(spark):
     assert not remaining, remaining
 
 
+def test_release_local_checkpoint_counts_failures_not_plain_plans(
+    spark, monkeypatch, caplog
+):
+    # a plan with no LogicalRDD holds no checkpoint: a no-op, not a failure;
+    # a release that raises is counted and logged once, never raised
+    from types import SimpleNamespace
+
+    from kinesis_stream_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "release_failures", 0)
+    dedup._release_local_checkpoint(spark.range(3))
+    assert dedup.release_failures == 0
+
+    def broken_plan():
+        raise RuntimeError("py4j went away")
+
+    broken = SimpleNamespace(_jdf=SimpleNamespace(queryExecution=broken_plan))
+    with caplog.at_level("WARNING", logger=dedup.__name__):
+        dedup._release_local_checkpoint(broken)
+        dedup._release_local_checkpoint(broken)
+    assert dedup.release_failures == 2
+    warnings = [r for r in caplog.records if r.name == dedup.__name__]
+    assert len(warnings) == 1
+
+    # the count is exact when many threads fail at once
+    import sys
+    import threading
+
+    monkeypatch.setattr(dedup, "release_failures", 0)
+    n_threads, n_calls = 16, 200
+
+    def fail_many():
+        for _ in range(n_calls):
+            dedup._release_local_checkpoint(broken)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=fail_many) for _ in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert dedup.release_failures == n_threads * n_calls
+
+
 def test_convergence_interval_one_matches_default(spark):
     from kinesis_stream_spark.operators.dedup import connected_components
 

@@ -411,6 +411,123 @@ def test_commit_flow_fatal_checkpoint_fails_query(spark, stream_dir, tmp_path):
         q.awaitTermination(120)
 
 
+_RANGE_SCHEMA = "shardId string, sequenceNumber string, subSequenceNumber int"
+
+
+def test_commit_flow_checkpoints_past_a_late_listed_record(spark):
+    """A file listed late (modification-time tie) puts a seq at or below
+    the shard's last checkpoint into the next batch. The flow must not
+    track that endpoint — its ack would be ignored and the shard would
+    never checkpoint again — and a batch wholly at or below the
+    checkpoint skips the shard's cycle."""
+    tracker = CheckpointTracker("w")
+    committed: dict[str, list[SequenceNumber]] = {"a": [], "b": []}
+    batch_fn = foreach_batch_commit_flow(
+        tracker, lambda df: None, lambda shard: committed[shard].append
+    )
+    batch_fn(
+        spark.createDataFrame(
+            [("a", "10", 0), ("a", "20", 0), ("b", "5", 0)], _RANGE_SCHEMA
+        ),
+        0,
+    )
+    # shard a: seq 15 sat in a file listed after batch 0's max (20)
+    batch_fn(
+        spark.createDataFrame(
+            [("a", "15", 0), ("a", "30", 0), ("b", "6", 0)], _RANGE_SCHEMA
+        ),
+        1,
+    )
+    batch_fn(spark.createDataFrame([("a", "12", 0), ("b", "7", 0)], _RANGE_SCHEMA), 2)
+
+    assert committed["a"] == [SequenceNumber(20), SequenceNumber(30)]
+    assert committed["b"] == [SequenceNumber(5), SequenceNumber(6), SequenceNumber(7)]
+    shard_a = tracker.start_shard("a")
+    assert shard_a.last_checkpoint == SequenceNumber(30)
+    assert shard_a.is_complete and not shard_a.tracked
+
+
+def test_commit_flow_process_error_waits_for_summary(spark, monkeypatch):
+    """When process_fn raises, the error escapes the batch fn only after
+    the concurrent range summary has settled (no job outlives the batch),
+    and no checkpointer is called for that batch."""
+    import time
+
+    from kinesis_stream_spark.streaming import delivery
+
+    sc = spark.sparkContext
+    original = delivery._shard_range_summaries
+    summarized: list[int] = []
+
+    def slow_summary(df):
+        time.sleep(0.5)  # still in flight when process_fn raises
+        rows = original(df)
+        summarized.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(delivery, "_shard_range_summaries", slow_summary)
+
+    class Boom(Exception):
+        pass
+
+    def process(df):
+        raise Boom()
+
+    checkpointers: list[str] = []
+
+    def checkpointer(shard_id: str):
+        checkpointers.append(shard_id)
+        return lambda seq: None
+
+    batch_fn = foreach_batch_commit_flow(CheckpointTracker("w"), process, checkpointer)
+    df = spark.createDataFrame([("a", "1", 0), ("b", "2", 0)], _RANGE_SCHEMA)
+    group = f"commit-flow-error-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "commit flow error path")
+    try:
+        with pytest.raises(Boom):
+            batch_fn(df, 0)
+        # the status store is fed asynchronously: drain its event queue so
+        # only jobs that are really still running read as active
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        group_jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+        active = set(sc.statusTracker().getActiveJobsIds())
+    finally:
+        sc._jsc.clearJobGroup()
+
+    assert summarized == [2]
+    assert group_jobs  # the summary's jobs ran in the caller's job group
+    assert not group_jobs & active
+    assert checkpointers == []
+
+
+def test_commit_flow_summary_runs_in_stream_job_group(
+    spark, stream_dir, tmp_path, monkeypatch
+):
+    """The summary runs on a helper thread; it must inherit the stream's
+    job group so query.stop() cancels its jobs and they count as the
+    stream's."""
+    from kinesis_stream_spark.streaming import delivery
+
+    sc = spark.sparkContext
+    original = delivery._shard_range_summaries
+    groups: list[str | None] = []
+
+    def recording(df):
+        groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+        return original(df)
+
+    monkeypatch.setattr(delivery, "_shard_range_summaries", recording)
+    cfg = _config(stream_dir, tmp_path)
+    batch_fn = foreach_batch_commit_flow(
+        CheckpointTracker(cfg.worker_id, cfg.checkpoint),
+        lambda df: None,
+        lambda shard: lambda seq: None,
+    )
+    q = run_at_least_once(source(spark, cfg), cfg, batch_fn)
+    q.awaitTermination(120)
+    assert groups and set(groups) == {str(q.runId)}
+
+
 def test_stream_session_equals_batch(spark, sf_dir, stream_dir, tmp_path):
     """Session windows through an ACTUAL StreamingQuery (availableNow
     trigger + checkpointLocation) equal the batch run of the same
