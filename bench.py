@@ -68,16 +68,20 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> None:
+def bench_env() -> tuple[str, str]:
+    """(sf_dir, cpus) from $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS; the
+    cpu count is exported so ``get_spark`` sizes ``local[N]`` from it."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 8)
     os.environ["SPARK_GRAFT_CPUS"] = cpus
+    return sf_dir, cpus
 
-    from kinesis_stream_spark.queries import all_queries
-    from kinesis_stream_spark.session import get_spark
 
-    spark = get_spark("kinesis-stream-spark-bench")
-
+def time_queries(spark, sf_dir: str, queries: dict) -> tuple[dict, dict, int]:
+    """The timing method: an untimed all-table noop warm-up, then each
+    query in sorted name order, timed as the min over
+    $SPARK_GRAFT_BENCH_REPS end-to-end noop-sink runs, with ``gc``
+    between queries. Returns (timings, failures, reps)."""
     # Warm the session before timing: JVM/codegen/parquet-reader init and
     # the noop-sink committer otherwise land entirely on whichever query
     # happens to sort first (~5s attributed to a 0.5s query).
@@ -98,7 +102,6 @@ def main() -> None:
     for t in TABLE_NAMES:
         load_table(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
 
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     # Each query is timed as the min over SPARK_GRAFT_BENCH_REPS runs.
     # Default 2 since round 6: single-run numbers swing up to ~1.75x on
     # the heavy composites (see the noise-band note above) and round 5
@@ -108,7 +111,8 @@ def main() -> None:
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
     timings: dict[str, float] = {}
     failures: dict[str, str] = {}
-    for name, fn in sorted(all_queries().items()):
+    for name, fn in sorted(queries.items()):
+        spark.sparkContext.setJobDescription(name)
         best = None
         for _ in range(reps):
             t0 = time.perf_counter()
@@ -131,6 +135,18 @@ def main() -> None:
         # letting session-wide state accumulate into later measurements
         # (suspected source of round-2's uniform ~13% drift).
         gc.collect()
+    return timings, failures, reps
+
+
+def main() -> None:
+    sf_dir, _ = bench_env()
+
+    from kinesis_stream_spark.queries import all_queries
+    from kinesis_stream_spark.session import get_spark
+
+    spark = get_spark("kinesis-stream-spark-bench")
+    timings, failures, reps = time_queries(spark, sf_dir, all_queries())
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     detail = {
         "metric": "query_inventory_runtime",

@@ -16,7 +16,7 @@ documented upgrade trigger in README.md ("graphs with long chains").
 Both phases are one groupBy-min + one equi-join over the EDGE list —
 the same shuffle shape per round as label propagation, just far fewer
 rounds — and per-round ``localCheckpoint`` keeps the plan from growing
-(at 100 TB, a durable checkpoint dir instead). Components are never
+(operators/stages.py for the release policy). Components are never
 materialized as rows-per-pair.
 
 The operator is a drop-in for ``connected_components`` — same
@@ -28,10 +28,10 @@ long-chain round-count case.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kinesis_stream_spark.operators.dedup import _release_local_checkpoint
+from kinesis_stream_spark.operators.stages import CheckpointScope
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -99,41 +99,32 @@ def connected_components_bigstar(
     clusters — wrong components mean wrong keep-decisions downstream.
     """
     raw = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-    obs0 = Observation()
-    cur = (
-        raw.where(F.col("u") != F.col("v"))
-        .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
-    cur_count = int(obs0.get["n"] or 0)
-    converged = False
-    for _ in range(max_rounds):
-        # row count rides the checkpoint materialization (r12): the
-        # former nxt.count() job per round is gone; the subtract still
-        # runs only on count-equality (normally just the final round)
-        obs = Observation()
-        nxt = (
-            _small_star(_large_star(cur))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
+    with CheckpointScope() as scope:
+        cur, cur_count = scope.pin(
+            raw.where(F.col("u") != F.col("v")).distinct(),
+            observe=F.count(F.lit(1)).alias("n"),
         )
-        nxt_count = int(obs.get["n"] or 0)
-        # fixpoint ⇔ equal edge SETS; both sides are distinct, so two
-        # one-sided subtracts reduce to count-equality plus one subtract
-        # (counts are carried on the driver — no recount of cur's frame)
-        if nxt_count == cur_count and nxt.subtract(cur).count() == 0:
-            _release_local_checkpoint(cur)
-            cur = nxt
-            converged = True
-            break
-        _release_local_checkpoint(cur)
-        cur = nxt
-        cur_count = nxt_count
-    if not converged:
-        raise ValueError(
-            f"connected_components_bigstar: no fixpoint in {max_rounds} rounds"
-        )
+        for _ in range(max_rounds):
+            # row count rides the checkpoint materialization (r12): the
+            # former nxt.count() job per round is gone; the subtract still
+            # runs only on count-equality (normally just the final round)
+            nxt, nxt_count = scope.pin(
+                _small_star(_large_star(cur)),
+                observe=F.count(F.lit(1)).alias("n"),
+            )
+            # fixpoint ⇔ equal edge SETS; both sides are distinct, so two
+            # one-sided subtracts reduce to count-equality plus one subtract
+            # (counts are carried on the driver — no recount of cur's frame)
+            converged = nxt_count == cur_count and nxt.subtract(cur).count() == 0
+            scope.release(cur)
+            cur, cur_count = nxt, nxt_count
+            if converged:
+                break
+        else:
+            raise ValueError(
+                f"connected_components_bigstar: no fixpoint in {max_rounds} rounds"
+            )
+        scope.keep(cur)
     # The star fixpoint contains every vertex that survived the
     # self-loop filter: each non-minimum vertex has exactly one
     # out-edge to its component minimum, and each minimum appears as

@@ -30,10 +30,7 @@ the pipeline end-to-end, not just row counts.
 
 from __future__ import annotations
 
-import logging
-import threading
-
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from kinesis_stream_spark.functions.hashing import (
@@ -43,9 +40,8 @@ from kinesis_stream_spark.functions.hashing import (
     sql_tokens,
     tokens,
 )
+from kinesis_stream_spark.operators.stages import CheckpointScope
 from kinesis_stream_spark.sources.batch import spread
-
-log = logging.getLogger(__name__)
 
 DEFAULT_NUM_HASHES = 16
 DEFAULT_BANDS = 4
@@ -514,42 +510,6 @@ def exact_dedup_incremental(
 # --- duplicate-cluster resolution (connected components) ----------------------
 
 
-#: Number of :func:`_release_local_checkpoint` calls that raised in this
-#: process. Each one left a checkpoint's blocks resident until session end.
-release_failures = 0
-_release_failures_lock = threading.Lock()
-
-
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Free the block-manager storage behind a ``localCheckpoint()``-ed
-    DataFrame whose data has been fully consumed downstream.
-
-    ``Dataset.unpersist()`` only covers cache-manager entries (verified:
-    it leaves localCheckpoint blocks resident), so reach through the
-    plan's ``LogicalRDD`` to the persisted RDD itself. A plan that is not
-    a ``LogicalRDD`` holds no checkpoint: nothing to free. Best-effort by
-    design — py4j internals; a failure only leaves the blocks held until
-    session end, so it is counted in ``release_failures`` (and logged the
-    first time) instead of raised.
-    """
-    global release_failures
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getName().endswith("LogicalRDD"):
-            plan.rdd().unpersist(False)
-    except Exception:
-        with _release_failures_lock:
-            release_failures += 1
-            first = release_failures == 1
-        if first:
-            log.warning(
-                "could not release a local checkpoint; its blocks stay "
-                "resident until session end (further failures are only "
-                "counted in dedup.release_failures)",
-                exc_info=True,
-            )
-
-
 def _label_sum() -> Column:
     """The monotone convergence metric of :func:`connected_components`:
     SUM of all labels in DECIMAL(38,0) (min-label propagation only ever
@@ -564,7 +524,6 @@ def connected_components(
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_iterations: int = 25,
-    convergence_check_interval: int = 2,
 ) -> DataFrame:
     """Resolve pairwise duplicate edges into clusters: each vertex gets
     the MINIMUM vertex id reachable from it (the canonical document).
@@ -583,8 +542,8 @@ def connected_components(
     min aggregate, so a round costs one join + one aggregation, not a
     neighbor-min groupBy plus a V-sized join-back; ``localCheckpoint``
     truncates the lineage each round so the plan doesn't grow with
-    iterations (at 100 TB use a checkpoint dir on durable storage
-    instead). Convergence is a driver-side scalar read from an
+    iterations (operators/stages.py for the release policy).
+    Convergence is a driver-side scalar read from an
     Observation riding the round's own materialization (labels only
     ever decrease, so an unchanged label-sum means the round was a
     no-op); ``max_iterations`` stays the hard bound.
@@ -594,61 +553,46 @@ def connected_components(
     # Materialize the edge list ONCE. Each round joins against `sym`;
     # without this the (possibly very expensive) upstream pair pipeline
     # re-executes every iteration — measured 64s → ~8s at sf0.1.
-    sym = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .unionAll(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
-        .localCheckpoint()
-    )
-    obs0 = Observation()
-    labels = (
-        sym.select(F.col("src").alias("v"))
-        .distinct()
-        .select("v", F.col("v").alias("comp"))
-        .observe(obs0, _label_sum())
-        .localCheckpoint()
-    )
-    # convergence is read from an Observation riding the round's own
-    # checkpoint materialization (r12): labels only ever DECREASE
-    # (comp' = min(comp, neighbor min) ≤ comp), so a round changed
-    # nothing iff SUM(comp) is unchanged — one monotone scalar
-    # (DECIMAL(38,0): a BIGINT id-sum can overflow at 100 TB vertex
-    # counts) compared on the driver, no extra job, and the loop can
-    # afford to check EVERY round (earlier exit, same labels —
-    # post-convergence rounds were no-ops).
-    # convergence_check_interval is retained for API compatibility but
-    # no longer skips checks; it never affected results.
-    del convergence_check_interval
-    prev_sum = obs0.get["label_sum"]
-    for i in range(max_iterations):
-        # One round = min(own, neighbor min) per vertex, as ONE
-        # shuffle-joined neighbor stream UNIONed with the vertex's own
-        # (v, comp) row feeding a single min aggregate — the former
-        # neighbor_min groupBy + V-sized left-join-back (two extra
-        # exchanges per round) computed the identical values: every
-        # vertex appears in `labels`, so the union branch supplies the
-        # own-label operand coalesce/least used to.
-        obs = Observation()
-        new_labels = (
-            sym.join(labels, sym.dst == labels.v)
-            .select(F.col("src").alias("v"), "comp")
-            .unionAll(labels.select("v", "comp"))
-            .groupBy("v")
-            .agg(F.min("comp").alias("comp"))
-            .observe(obs, _label_sum())
-            .localCheckpoint()  # truncate lineage: plan must not grow per round
+    with CheckpointScope() as scope:
+        sym = scope.pin(
+            edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+            .unionAll(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
         )
-        new_sum = obs.get["label_sum"]
-        # localCheckpoint() is eager, so the superseded round's blocks are
-        # fully consumed once new_labels materializes — release them, or the
-        # block manager holds O(iterations) label copies for the session.
-        _release_local_checkpoint(labels)
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    # returned labels are self-contained (checkpointed); edge blocks are dead
-    _release_local_checkpoint(sym)
-    return labels
+        labels, prev_sum = scope.pin(
+            sym.select(F.col("src").alias("v"))
+            .distinct()
+            .select("v", F.col("v").alias("comp")),
+            observe=_label_sum(),
+        )
+        # convergence is read from an Observation riding the round's own
+        # checkpoint materialization (r12): labels only ever DECREASE
+        # (comp' = min(comp, neighbor min) ≤ comp), so a round changed
+        # nothing iff SUM(comp) is unchanged — one monotone scalar
+        # (DECIMAL(38,0): a BIGINT id-sum can overflow at 100 TB vertex
+        # counts) compared on the driver, no extra job, and the loop can
+        # afford to check EVERY round (earlier exit, same labels —
+        # post-convergence rounds were no-ops).
+        for _ in range(max_iterations):
+            # One round = min(own, neighbor min) per vertex, as ONE
+            # shuffle-joined neighbor stream UNIONed with the vertex's own
+            # (v, comp) row feeding a single min aggregate — the former
+            # neighbor_min groupBy + V-sized left-join-back (two extra
+            # exchanges per round) computed the identical values: every
+            # vertex appears in `labels`, so the union branch supplies the
+            # own-label operand coalesce/least used to.
+            labels, new_sum = scope.pin(
+                sym.join(labels, sym.dst == labels.v)
+                .select(F.col("src").alias("v"), "comp")
+                .unionAll(labels.select("v", "comp"))
+                .groupBy("v")
+                .agg(F.min("comp").alias("comp")),
+                observe=_label_sum(),
+                replaces=labels,
+            )
+            if new_sum == prev_sum:
+                break
+            prev_sum = new_sum
+        return scope.keep(labels)
 
 
 def duplicate_clusters(

@@ -171,7 +171,12 @@ def fuzzy_pair_histogram(
     blocking, length band, salting and conjunct order all mirror
     :func:`fuzzy_pairs`; the string-level pair ordering uses s_u < s_v
     (strings within a group are equal, across groups distinct, so each
-    unordered string pair is enumerated exactly once)."""
+    unordered string pair is enumerated exactly once).
+
+    Precondition: ``id_col`` is unique per row (it is for ``p_partkey``,
+    the registered caller). With duplicate ids the intra count
+    C(cnt, 2) and the cross product cnt_u·cnt_v include equal-id pairs,
+    which :func:`fuzzy_pairs` (strict id_a < id_b) never emits."""
     if max_dist < 0:
         raise ValueError(f"max_dist must be >= 0, got {max_dist}")
     if salt_buckets < 1:

@@ -25,12 +25,11 @@ per-node sum is ≤ ~2^40 regardless of graph size — BIGINT-safe at any
 N (contributions CONSERVE mass; no N-proportional blowup anywhere).
 
 Scale shape (100 TB): the edge list is the only large input,
-checkpointed once (at deployment scale a durable checkpoint dir, as
-everywhere in the repo); each round is one broadcast-joined map over
+checkpointed once; each round is one broadcast-joined map over
 edges (rank and checkpointed outdeg joins on src) plus a dst-keyed
 sum. N and the per-round dangling sum ride as broadcast 1-row frames —
-NO driver collect anywhere. Rounds checkpoint eagerly and superseded
-blocks are released as the loop advances (see :func:`pagerank`).
+NO driver collect anywhere. Checkpoint lifetime for every iterative
+operator here follows operators/stages.py.
 Rounds are a fixed constant: power iteration converges geometrically
 (damping 0.85 → ~5 rounds for ranking stability), so the job count is
 bounded and known.
@@ -38,10 +37,10 @@ bounded and known.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kinesis_stream_spark.operators.dedup import _release_local_checkpoint
+from kinesis_stream_spark.operators.stages import CheckpointScope
 
 PR_SCALE = 1 << 40
 
@@ -49,12 +48,11 @@ PR_SCALE = 1 << 40
 def _undirected_edges(
     edges: DataFrame, src_col: str, dst_col: str
 ) -> DataFrame:
-    """Cleaned, doubled, deduped adjacency, checkpoint-pinned: NULL
+    """Cleaned, doubled, deduped adjacency (callers pin it): NULL
     endpoints and self-loops drop; every undirected edge appears as
     both (a, b) and (b, a). Shared by the fixed-round operators
-    (:func:`kcore`, :func:`label_propagation`) so the graph-cleaning
-    invariant lives in exactly one place — callers release the
-    returned checkpoint when done."""
+    (:func:`kcore`, :func:`label_propagation`, :func:`bfs_hops`) so the
+    graph-cleaning invariant lives in exactly one place."""
     e = (
         edges.where(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
         .where(F.col(src_col) != F.col(dst_col))
@@ -68,10 +66,7 @@ def _undirected_edges(
         )
         .distinct()
     )
-    return (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .localCheckpoint(eager=True)
-    )
+    return e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
 
 
 def _pagerank_round(
@@ -127,50 +122,39 @@ def pagerank(
     ordinary edges; nodes appearing only as destinations are dangling
     and their mass redistributes uniformly each round.
 
-    Block-manager hygiene (the components-family discipline): rounds
-    checkpoint EAGERLY and every superseded checkpoint — the previous
-    round's ranks, and after the final round the edge list, node frame,
-    and out-degrees — is released before return, so a completed call
-    retains ONE node-sized block (the final ranks), never the
-    corpus-sized edge checkpoint. The cost is that construction runs
-    the computation (standard for the iterative operators here;
-    connected_components does the same)."""
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        e.select(F.col("src").alias("v"))
-        .unionAll(e.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
-    nn = nodes.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    # out-degrees feed two joins per round; checkpoint once instead of
-    # re-aggregating the edge list up to 2x per round
-    outdeg = (
-        e.groupBy(F.col("src").alias("v"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint()
-    )
-    r = (
-        nodes.crossJoin(F.broadcast(nn))
-        .select("v", F.expr(f"{PR_SCALE} div n").alias("r"))
-        .localCheckpoint()
-    )
-    for _ in range(iterations):
-        prev = r
-        r = _pagerank_round(e, nodes, outdeg, nn, prev).localCheckpoint()
-        _release_local_checkpoint(prev)
-    for frame in (e, nodes, outdeg):
-        _release_local_checkpoint(frame)
-    return r.select(
-        F.col("v").alias("node"),
-        F.col("r").alias("rank_fx"),
-        (F.col("r").cast("double") / PR_SCALE).alias("rank"),
-    )
+    Rounds checkpoint eagerly (operators/stages.py for the release
+    policy), so a completed call retains ONE node-sized block (the
+    final ranks), never the corpus-sized edge checkpoint. The cost is
+    that construction runs the computation."""
+    with CheckpointScope() as scope:
+        e = scope.pin(
+            edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+            .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+            .distinct()
+        )
+        nodes = scope.pin(
+            e.select(F.col("src").alias("v"))
+            .unionAll(e.select(F.col("dst").alias("v")))
+            .distinct()
+        )
+        nn = nodes.agg(F.count(F.lit(1)).cast("long").alias("n"))
+        # out-degrees feed two joins per round; checkpoint once instead of
+        # re-aggregating the edge list up to 2x per round
+        outdeg = scope.pin(
+            e.groupBy(F.col("src").alias("v"))
+            .agg(F.count(F.lit(1)).alias("deg"))
+        )
+        r = scope.pin(
+            nodes.crossJoin(F.broadcast(nn))
+            .select("v", F.expr(f"{PR_SCALE} div n").alias("r"))
+        )
+        for _ in range(iterations):
+            r = scope.pin(_pagerank_round(e, nodes, outdeg, nn, r), replaces=r)
+        return scope.keep(r).select(
+            F.col("v").alias("node"),
+            F.col("r").alias("rank_fx"),
+            (F.col("r").cast("double") / PR_SCALE).alias("rank"),
+        )
 
 
 def sql_pagerank(
@@ -254,33 +238,31 @@ def kcore(
     comparisons only; nothing engine-dependent anywhere.
 
     Scale shape: the doubled adjacency is the only corpus-sized frame,
-    localCheckpoint-pinned once (durable checkpoint at deployment
-    scale) and re-pinned per round as it shrinks, with superseded
-    blocks released (the components/pagerank release discipline). Each
+    checkpointed once and re-pinned per round as it shrinks
+    (operators/stages.py for the release policy). Each
     round is one map-side-combinable degree aggregate plus two
     shuffle-keyed semi joins against the (node-sized, much smaller)
     survivor set. Rounds are a small constant — each extra round costs
     one aggregate + two joins, never a growing lineage."""
     if k < 1 or rounds < 1:
         raise ValueError(f"k ({k}) and rounds ({rounds}) must be >= 1")
-    und = _undirected_edges(edges, src_col, dst_col)
-    for _ in range(rounds):
-        deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("degree"))
-        keep = deg.where(F.col("degree") >= k).select("a")
-        prev = und
-        und = (
-            und.join(keep, "a", "left_semi")
-            .join(keep.select(F.col("a").alias("b")), "b", "left_semi")
-            .select("a", "b")
-            .localCheckpoint(eager=True)
+    with CheckpointScope() as scope:
+        und = scope.pin(_undirected_edges(edges, src_col, dst_col))
+        for _ in range(rounds):
+            deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("degree"))
+            keep = deg.where(F.col("degree") >= k).select("a")
+            und = scope.pin(
+                und.join(keep, "a", "left_semi")
+                .join(keep.select(F.col("a").alias("b")), "b", "left_semi")
+                .select("a", "b"),
+                replaces=und,
+            )
+        return (
+            scope.keep(und)
+            .groupBy("a")
+            .agg(F.count(F.lit(1)).alias("degree"))
+            .select(F.col("a").alias("node"), "degree")
         )
-        _release_local_checkpoint(prev)
-    out = (
-        und.groupBy("a")
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .select(F.col("a").alias("node"), "degree")
-    )
-    return out
 
 
 def sql_kcore(
@@ -346,46 +328,41 @@ def label_propagation(
     aggregates (max count, then min label among the argmax) — the
     argmax-by-(count, label) is expressed as aggregate-join-aggregate
     instead of a window so every step is combinable and shuffle keys
-    stay on node id. Labels are checkpointed per round with the
-    superseded block released (the pagerank discipline)."""
+    stay on node id. Labels are checkpointed per round
+    (operators/stages.py for the release policy)."""
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    und = _undirected_edges(edges, src_col, dst_col)
-    lab = (
-        und.select(F.col("a").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(rounds):
-        nbr = und.join(
-            lab.select(F.col("node").alias("b"), "label"), "b"
-        ).select(F.col("a").alias("node"), "label")
-        cnts = nbr.groupBy("node", "label").agg(F.count(F.lit(1)).alias("c"))
-        prev = lab
-        # argmax-by-(count desc, label asc) as ONE combinable aggregate:
-        # min(struct(-c, label)) — struct order compares -c first
-        # (largest count wins), then takes the MIN label among ties.
-        # The former aggregate-join-aggregate (max count per node,
-        # join back, min label) computed the identical winner but
-        # re-executed the edge-sized cnts subtree on both join inputs
-        # — two neighbor joins + three exchanges per round instead of
-        # one join + two combinable aggregations (r12).
-        lab = (
-            cnts.groupBy("node")
-            .agg(
-                F.min(
-                    F.struct((-F.col("c")).alias("nc"), F.col("label"))
-                ).alias("w")
-            )
-            .select("node", F.col("w.label").alias("label"))
-            .localCheckpoint(eager=True)
+    with CheckpointScope() as scope:
+        und = scope.pin(_undirected_edges(edges, src_col, dst_col))
+        lab = scope.pin(
+            und.select(F.col("a").alias("node"))
+            .distinct()
+            .select("node", F.col("node").alias("label"))
         )
-        _release_local_checkpoint(prev)
-    # the returned labels are checkpointed, so the adjacency block is
-    # no longer reachable — release it (the pagerank discipline)
-    _release_local_checkpoint(und)
-    return lab
+        for _ in range(rounds):
+            nbr = und.join(
+                lab.select(F.col("node").alias("b"), "label"), "b"
+            ).select(F.col("a").alias("node"), "label")
+            cnts = nbr.groupBy("node", "label").agg(F.count(F.lit(1)).alias("c"))
+            # argmax-by-(count desc, label asc) as ONE combinable aggregate:
+            # min(struct(-c, label)) — struct order compares -c first
+            # (largest count wins), then takes the MIN label among ties.
+            # The former aggregate-join-aggregate (max count per node,
+            # join back, min label) computed the identical winner but
+            # re-executed the edge-sized cnts subtree on both join inputs
+            # — two neighbor joins + three exchanges per round instead of
+            # one join + two combinable aggregations (r12).
+            lab = scope.pin(
+                cnts.groupBy("node")
+                .agg(
+                    F.min(
+                        F.struct((-F.col("c")).alias("nc"), F.col("label"))
+                    ).alias("w")
+                )
+                .select("node", F.col("w.label").alias("label")),
+                replaces=lab,
+            )
+        return scope.keep(lab)
 
 
 def sql_label_propagation(
@@ -569,7 +546,7 @@ def bfs_hops(
     the frontier empties (identical result — further rounds are
     no-ops, which the whole-set oracle replays as fixed-point CTEs).
     The doubled adjacency is the only corpus-sized frame
-    (checkpoint-pinned once, released on return). Sources that aren't
+    (checkpointed once, released on return). Sources that aren't
     graph nodes are dropped by the semi join (distance to a non-node
     is undefined). ``frontier_sizes``, when given, receives the
     per-round frontier row counts (test / ops observability).
@@ -579,56 +556,46 @@ def bfs_hops(
     exactly the ≤k-hop minimum, matching the unrolled oracle."""
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    und = _undirected_edges(edges, src_col, dst_col)
-    nodes = und.select(F.col("a").alias("node")).distinct()
-    frontier = (
-        nodes.join(
-            sources.select(F.col(node_col).alias("node")).distinct(),
-            "node",
-            "left_semi",
+    with CheckpointScope() as scope:
+        und = scope.pin(_undirected_edges(edges, src_col, dst_col))
+        nodes = und.select(F.col("a").alias("node")).distinct()
+        frontier = scope.pin(
+            nodes.join(
+                sources.select(F.col(node_col).alias("node")).distinct(),
+                "node",
+                "left_semi",
+            )
+            .select("node", F.lit(0).cast("long").alias("dist"))
         )
-        .select("node", F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint(eager=True)
-    )
-    dist = frontier
-    # r12 loop shape: ONE job per hop instead of three. The frontier
-    # row count rides the checkpoint materialization as an Observation
-    # metric (the former frontier.count() job is gone), and `dist`
-    # stays a LAZY union of the per-hop frontier checkpoints —
-    # frontiers are disjoint, so the union holds each node exactly
-    # once and the per-hop anti join reads the same bytes a
-    # re-checkpointed dist would have held, without paying a V-sized
-    # materialization per hop. One final checkpoint makes the result
-    # self-contained so every per-hop block can be released.
-    frontiers = [frontier]
-    if frontier_sizes is not None:
-        frontier_sizes.append(frontier.count())
-    for hop in range(1, rounds + 1):
-        candidates = (
-            und.join(frontier.select(F.col("node").alias("a")), "a")
-            .select(F.col("b").alias("node"))
-            .distinct()
-        )
-        obs = Observation()
-        new_frontier = (
-            candidates.join(dist, "node", "left_anti")
-            .select("node", F.lit(hop).cast("long").alias("dist"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        frontiers.append(new_frontier)
-        dist = dist.unionAll(new_frontier)
-        frontier = new_frontier
-        n_new = int(obs.get["n"] or 0)
+        dist = frontier
+        # r12 loop shape: ONE job per hop instead of three. The frontier
+        # row count rides the checkpoint materialization as an Observation
+        # metric (the former frontier.count() job is gone), and `dist`
+        # stays a LAZY union of the per-hop frontier checkpoints —
+        # frontiers are disjoint, so the union holds each node exactly
+        # once and the per-hop anti join reads the same bytes a
+        # re-checkpointed dist would have held, without paying a V-sized
+        # materialization per hop. One final checkpoint makes the result
+        # self-contained so every per-hop block can be released.
         if frontier_sizes is not None:
-            frontier_sizes.append(n_new)
-        if n_new == 0:
-            break
-    out = dist.localCheckpoint(eager=True)
-    for f in frontiers:
-        _release_local_checkpoint(f)
-    _release_local_checkpoint(und)
-    return out
+            frontier_sizes.append(frontier.count())
+        for hop in range(1, rounds + 1):
+            candidates = (
+                und.join(frontier.select(F.col("node").alias("a")), "a")
+                .select(F.col("b").alias("node"))
+                .distinct()
+            )
+            frontier, n_new = scope.pin(
+                candidates.join(dist, "node", "left_anti")
+                .select("node", F.lit(hop).cast("long").alias("dist")),
+                observe=F.count(F.lit(1)).alias("n"),
+            )
+            dist = dist.unionAll(frontier)
+            if frontier_sizes is not None:
+                frontier_sizes.append(int(n_new or 0))
+            if not n_new:
+                break
+        return scope.keep(scope.pin(dist))
 
 
 def sql_bfs_hops(
@@ -696,86 +663,78 @@ def personalized_pagerank(
 
     Scale shape: identical to :func:`pagerank` (edge-sized join +
     dst-keyed sum per round, broadcast 1-row scalars, eager round
-    checkpoints with release); the seed flag rides as one extra
-    node-sized left join per round."""
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        e.select(F.col("src").alias("v"))
-        .unionAll(e.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
-    seedset = (
-        nodes.join(
-            seeds.select(F.col(node_col).alias("v")).distinct(),
-            "v",
-            "left_semi",
+    checkpoints); the seed flag rides as one extra node-sized left
+    join per round."""
+    with CheckpointScope() as scope:
+        e = scope.pin(
+            edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+            .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+            .distinct()
         )
-        .select("v", F.lit(1).alias("is_seed"))
-        .localCheckpoint()
-    )
-    ns = seedset.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    outdeg = (
-        e.groupBy(F.col("src").alias("v"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint()
-    )
-    r = (
-        nodes.join(seedset, "v", "left")
-        .crossJoin(F.broadcast(ns))
-        .select(
-            "v",
-            F.expr(
-                f"case when is_seed = 1 then {PR_SCALE} div n else 0 end"
+        nodes = scope.pin(
+            e.select(F.col("src").alias("v"))
+            .unionAll(e.select(F.col("dst").alias("v")))
+            .distinct()
+        )
+        seedset = scope.pin(
+            nodes.join(
+                seeds.select(F.col(node_col).alias("v")).distinct(),
+                "v",
+                "left_semi",
             )
-            .cast("long")
-            .alias("r"),
+            .select("v", F.lit(1).alias("is_seed"))
         )
-        .localCheckpoint()
-    )
-    for _ in range(iterations):
-        contribs = (
-            e.join(r.select(F.col("v").alias("src"), "r"), "src")
-            .join(outdeg.select(F.col("v").alias("src"), "deg"), "src")
-            .select("dst", F.expr("(17 * r) div (20 * deg)").alias("c"))
-            .groupBy(F.col("dst").alias("v"))
-            .agg(F.sum("c").alias("csum"))
+        ns = seedset.agg(F.count(F.lit(1)).cast("long").alias("n"))
+        outdeg = scope.pin(
+            e.groupBy(F.col("src").alias("v"))
+            .agg(F.count(F.lit(1)).alias("deg"))
         )
-        dang = r.join(outdeg, "v", "left_anti").agg(
-            F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("ds")
-        )
-        prev = r
-        r = (
-            nodes.join(contribs, "v", "left")
-            .join(seedset, "v", "left")
-            .crossJoin(F.broadcast(dang))
+        r = scope.pin(
+            nodes.join(seedset, "v", "left")
             .crossJoin(F.broadcast(ns))
             .select(
                 "v",
                 F.expr(
-                    f"case when is_seed = 1 then"
-                    f" (3 * {PR_SCALE}) div (20 * n)"
-                    " + (17 * ds) div (20 * n) else 0 end"
-                    " + coalesce(csum, 0)"
+                    f"case when is_seed = 1 then {PR_SCALE} div n else 0 end"
                 )
                 .cast("long")
                 .alias("r"),
             )
-            .localCheckpoint()
         )
-        _release_local_checkpoint(prev)
-    for frame in (e, nodes, outdeg, seedset):
-        _release_local_checkpoint(frame)
-    return r.select(
-        F.col("v").alias("node"),
-        F.col("r").alias("rank_fx"),
-        (F.col("r").cast("double") / PR_SCALE).alias("rank"),
-    )
+        for _ in range(iterations):
+            contribs = (
+                e.join(r.select(F.col("v").alias("src"), "r"), "src")
+                .join(outdeg.select(F.col("v").alias("src"), "deg"), "src")
+                .select("dst", F.expr("(17 * r) div (20 * deg)").alias("c"))
+                .groupBy(F.col("dst").alias("v"))
+                .agg(F.sum("c").alias("csum"))
+            )
+            dang = r.join(outdeg, "v", "left_anti").agg(
+                F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("ds")
+            )
+            r = scope.pin(
+                nodes.join(contribs, "v", "left")
+                .join(seedset, "v", "left")
+                .crossJoin(F.broadcast(dang))
+                .crossJoin(F.broadcast(ns))
+                .select(
+                    "v",
+                    F.expr(
+                        f"case when is_seed = 1 then"
+                        f" (3 * {PR_SCALE}) div (20 * n)"
+                        " + (17 * ds) div (20 * n) else 0 end"
+                        " + coalesce(csum, 0)"
+                    )
+                    .cast("long")
+                    .alias("r"),
+                ),
+                replaces=r,
+            )
+        return scope.keep(r).select(
+            F.col("v").alias("node"),
+            F.col("r").alias("rank_fx"),
+            (F.col("r").cast("double") / PR_SCALE).alias("rank"),
+        )
 
 
 def sql_personalized_pagerank(
@@ -888,7 +847,7 @@ def cheapest_path(
     matching the unrolled fixed-point oracle). Parallel (a, b) edges
     collapse to their MIN weight map-side BEFORE any iteration (the
     only corpus-sized pass), with per-round ``localCheckpoint``
-    lineage cuts and release discipline. Costs are bounded by
+    lineage cuts. Costs are bounded by
     rounds·max(w) — no N-proportional growth. Sources that aren't
     graph nodes are dropped by the semi join. ``frontier_sizes``,
     when given, receives per-round improved-node counts.
@@ -909,77 +868,63 @@ def cheapest_path(
             F.col(weight_col).cast("long").alias("w"),
         )
     )
-    und = (
-        e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b"), "w"))
-        .groupBy("a", "b")
-        .agg(F.min("w").alias("w"))
-        .localCheckpoint(eager=True)
-    )
-    nodes = und.select(F.col("a").alias("node")).distinct()
-    frontier = (
-        nodes.join(
-            sources.select(F.col(node_col).alias("node")).distinct(),
-            "node",
-            "left_semi",
+    with CheckpointScope() as scope:
+        und = scope.pin(
+            e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b"), "w"))
+            .groupBy("a", "b")
+            .agg(F.min("w").alias("w"))
         )
-        .select("node", F.lit(0).cast("long").alias("cost"))
-        .localCheckpoint(eager=True)
-    )
-    cost = frontier
-    if frontier_sizes is not None:
-        frontier_sizes.append(frontier.count())
-    for _ in range(rounds):
-        candidates = (
-            und.join(
-                frontier.select(F.col("node").alias("a"), "cost"), "a"
-            )
-            .select(
-                F.col("b").alias("node"),
-                (F.col("cost") + F.col("w")).alias("cand"),
-            )
-            .groupBy("node")
-            .agg(F.min("cand").alias("cand"))
-        )
-        # improved-count rides the checkpoint materialization as an
-        # Observation metric (r12) — the former frontier.count() job
-        # per round is gone
-        obs = Observation()
-        improved = (
-            candidates.join(
-                cost.select("node", F.col("cost").alias("old")),
+        nodes = und.select(F.col("a").alias("node")).distinct()
+        frontier = scope.pin(
+            nodes.join(
+                sources.select(F.col(node_col).alias("node")).distinct(),
                 "node",
-                "left",
+                "left_semi",
             )
-            .where(F.col("old").isNull() | (F.col("cand") < F.col("old")))
-            .select("node", F.col("cand").alias("cost"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .select("node", F.lit(0).cast("long").alias("cost"))
         )
-        n_improved = int(obs.get["n"] or 0)
-        prev_cost, prev_frontier = cost, frontier
-        frontier = improved
+        cost = frontier
         if frontier_sizes is not None:
-            frontier_sizes.append(n_improved)
-        if n_improved == 0:
-            # nothing improved: cost is already the fixpoint — skip
-            # rebuilding (and re-materializing) an identical frame
-            _release_local_checkpoint(improved)
-            if prev_cost is not prev_frontier:
-                _release_local_checkpoint(prev_frontier)
-            frontier = prev_cost
-            break
-        cost = (
-            cost.join(improved, "node", "left_anti")
-            .unionAll(improved)
-            .localCheckpoint(eager=True)
-        )
-        if prev_cost is not prev_frontier:
-            _release_local_checkpoint(prev_cost)
-        _release_local_checkpoint(prev_frontier)
-    if frontier is not cost:
-        _release_local_checkpoint(frontier)
-    _release_local_checkpoint(und)
-    return cost
+            frontier_sizes.append(frontier.count())
+        for _ in range(rounds):
+            candidates = (
+                und.join(
+                    frontier.select(F.col("node").alias("a"), "cost"), "a"
+                )
+                .select(
+                    F.col("b").alias("node"),
+                    (F.col("cost") + F.col("w")).alias("cand"),
+                )
+                .groupBy("node")
+                .agg(F.min("cand").alias("cand"))
+            )
+            # improved-count rides the checkpoint materialization as an
+            # Observation metric (r12) — the former frontier.count() job
+            # per round is gone
+            improved, n_improved = scope.pin(
+                candidates.join(
+                    cost.select("node", F.col("cost").alias("old")),
+                    "node",
+                    "left",
+                )
+                .where(F.col("old").isNull() | (F.col("cand") < F.col("old")))
+                .select("node", F.col("cand").alias("cost")),
+                observe=F.count(F.lit(1)).alias("n"),
+            )
+            if frontier_sizes is not None:
+                frontier_sizes.append(int(n_improved or 0))
+            if not n_improved:
+                # nothing improved: cost is already the fixpoint — skip
+                # rebuilding (and re-materializing) an identical frame
+                break
+            cost = scope.pin(
+                cost.join(improved, "node", "left_anti")
+                .unionAll(improved),
+                replaces=cost,
+            )
+            scope.release(frontier)
+            frontier = improved
+        return scope.keep(cost)
 
 
 def sql_cheapest_path(
@@ -1467,15 +1412,32 @@ def sql_reciprocity(edges_cte: str) -> str:
 HITS_SCALE = 1 << 20
 
 
-def _hits_l1_normalize(raw_ck: DataFrame, t: int) -> DataFrame:
-    """(v, raw) → (v, s) with Σs ≈ HITS_SCALE: s = raw·2^20 div Σraw —
-    exact integer floor division on both engines (all-zero total ⇒ all
-    zeros by contract, never a divide by zero). ``t`` is the exact
-    BIGINT Σraw, read driver-side from an Observation riding the raw
-    frame's own checkpoint materialization (r12) — the former
+def _hits_half_round(
+    scope: CheckpointScope,
+    e: DataFrame,
+    scores: DataFrame,
+    key: str,
+    group: str,
+    replaces: DataFrame | None,
+) -> tuple[DataFrame, DataFrame]:
+    """One HITS half-round: (v, raw) = Σ ``scores`` over the edges
+    joined on ``key`` and grouped by ``group``, pinned (replacing the
+    previous round's raw frame), then L1-normalized to (v, s) with
+    Σs ≈ HITS_SCALE: s = raw·2^20 div Σraw — exact integer floor
+    division on both engines (all-zero total ⇒ all zeros by contract,
+    never a divide by zero). Returns (raw checkpoint, scores). The
+    exact BIGINT Σraw rides the raw frame's own checkpoint
+    materialization as an Observation (r12) — the former
     1-row-aggregate + broadcast crossJoin form computed the identical
     integers but re-executed the edge-join-plus-sum subtree on both
     branches, doubling the per-half-round edge work."""
+    raw_ck, t = scope.pin(
+        e.join(scores.select(F.col("v").alias(key), "s"), key)
+        .groupBy(F.col(group).alias("v"))
+        .agg(F.sum("s").cast("long").alias("raw")),
+        observe=F.coalesce(F.sum("raw"), F.lit(0)).cast("long").alias("t"),
+        replaces=replaces,
+    )
     if t > 0:
         s = F.expr(
             f"cast(cast(raw as decimal(38,0)) * {HITS_SCALE} div {t}"
@@ -1483,7 +1445,7 @@ def _hits_l1_normalize(raw_ck: DataFrame, t: int) -> DataFrame:
         )
     else:
         s = F.lit(0).cast("long")
-    return raw_ck.select("v", s.alias("s"))
+    return raw_ck, raw_ck.select("v", s.alias("s"))
 
 
 def hits_scores(
@@ -1524,87 +1486,52 @@ def hits_scores(
     Scale shape: per round, two edge-map joins + two combinable
     dst/src-keyed sums + two 1-row reductions broadcast back — edge
     traffic 2·E rows per round, state one node-sized frame. Rounds
-    checkpoint eagerly with superseded checkpoints released (the
-    iterative-family block-manager hygiene); a completed call retains
-    ONE node-sized block (the final scores — the :func:`pagerank`
-    discipline). ``iterations`` must be ≥ 1 (there is no meaningful
-    0-round HITS state — the uniform init is a hub-only frame)."""
+    checkpoint eagerly (operators/stages.py for the release policy); a
+    completed call retains ONE node-sized block (the final scores).
+    ``iterations`` must be ≥ 1 (there is no meaningful 0-round HITS
+    state — the uniform init is a hub-only frame)."""
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        e.select(F.col("src").alias("v"))
-        .unionAll(e.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
-    h_ck = nodes.select(
-        "v", F.lit(HITS_SCALE).cast("long").alias("s")
-    ).localCheckpoint()
-    h = h_ck
-    a = a_ck = None
-    # per half-round the RAW edge sum is checkpointed with the L1 total
-    # riding the same materialization as an Observation; normalization
-    # is then a lazy projection over the checkpointed blocks with the
-    # total as a literal — one edge join per half-round instead of two
-    # (the former broadcast-total crossJoin re-ran the edge sum on its
-    # aggregate branch), and no extra job for the total (r12).
-    for _ in range(iterations):
-        obs_a = Observation()
-        araw = (
-            e.join(h.select(F.col("v").alias("src"), "s"), "src")
-            .groupBy(F.col("dst").alias("v"))
-            .agg(F.sum("s").cast("long").alias("raw"))
-            .observe(
-                obs_a,
-                F.coalesce(F.sum("raw"), F.lit(0)).cast("long").alias("t"),
+    with CheckpointScope() as scope:
+        e = scope.pin(
+            edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+            .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+            .distinct()
+        )
+        nodes = scope.pin(
+            e.select(F.col("src").alias("v"))
+            .unionAll(e.select(F.col("dst").alias("v")))
+            .distinct()
+        )
+        h = hraw = scope.pin(
+            nodes.select("v", F.lit(HITS_SCALE).cast("long").alias("s"))
+        )
+        araw = None
+        # per half-round the RAW edge sum is checkpointed with the L1 total
+        # riding the same materialization as an Observation; normalization
+        # is then a lazy projection over the checkpointed blocks with the
+        # total as a literal — one edge join per half-round instead of two
+        # (the former broadcast-total crossJoin re-ran the edge sum on its
+        # aggregate branch), and no extra job for the total (r12).
+        for _ in range(iterations):
+            araw, a = _hits_half_round(scope, e, h, "src", "dst", araw)
+            hraw, h = _hits_half_round(scope, e, a, "dst", "src", hraw)
+        out = scope.pin(
+            nodes.join(h.withColumnRenamed("s", "h"), "v", "left")
+            .join(a.withColumnRenamed("s", "a"), "v", "left")
+            .select(
+                F.col("v").alias("node"),
+                F.coalesce(F.col("h"), F.lit(0)).cast("long").alias("hub_fx"),
+                F.coalesce(F.col("a"), F.lit(0)).cast("long").alias("auth_fx"),
             )
-            .localCheckpoint()
         )
-        prev_a_ck = a_ck
-        a_ck = araw
-        a = _hits_l1_normalize(araw, obs_a.get["t"])
-        if prev_a_ck is not None:
-            _release_local_checkpoint(prev_a_ck)
-        obs_h = Observation()
-        hraw = (
-            e.join(a.select(F.col("v").alias("dst"), "s"), "dst")
-            .groupBy(F.col("src").alias("v"))
-            .agg(F.sum("s").cast("long").alias("raw"))
-            .observe(
-                obs_h,
-                F.coalesce(F.sum("raw"), F.lit(0)).cast("long").alias("t"),
-            )
-            .localCheckpoint()
+        return scope.keep(out).select(
+            "node",
+            "hub_fx",
+            "auth_fx",
+            (F.col("hub_fx").cast("double") / HITS_SCALE).alias("hub"),
+            (F.col("auth_fx").cast("double") / HITS_SCALE).alias("auth"),
         )
-        prev_h_ck = h_ck
-        h_ck = hraw
-        h = _hits_l1_normalize(hraw, obs_h.get["t"])
-        _release_local_checkpoint(prev_h_ck)
-    out = (
-        nodes.join(h.withColumnRenamed("s", "h"), "v", "left")
-        .join(a.withColumnRenamed("s", "a"), "v", "left")
-        .select(
-            F.col("v").alias("node"),
-            F.coalesce(F.col("h"), F.lit(0)).cast("long").alias("hub_fx"),
-            F.coalesce(F.col("a"), F.lit(0)).cast("long").alias("auth_fx"),
-        )
-        .localCheckpoint()
-    )
-    for frame in (e, nodes, h_ck, a_ck):
-        _release_local_checkpoint(frame)
-    return out.select(
-        "node",
-        "hub_fx",
-        "auth_fx",
-        (F.col("hub_fx").cast("double") / HITS_SCALE).alias("hub"),
-        (F.col("auth_fx").cast("double") / HITS_SCALE).alias("auth"),
-    )
 
 
 def sql_hits_scores(edges_cte: str, *, iterations: int = 3) -> str:

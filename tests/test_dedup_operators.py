@@ -164,94 +164,14 @@ def test_connected_components_long_chain_converges(spark):
     assert comp == {v: 1 for v in range(1, 13)}
 
 
-def test_connected_components_releases_checkpoint_blocks(spark):
-    # every intermediate localCheckpoint except the returned labels must
-    # be unpersisted — at scale a leaked per-round label copy holds
-    # O(iterations × |V|) block-manager storage for the session
-    from kinesis_stream_spark.operators.dedup import (
-        _release_local_checkpoint,
-        connected_components,
-    )
-
-    sc = spark.sparkContext
-    before = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 12)], "id_a long, id_b long"
-    )
-    labels = connected_components(edges)
-    labels.collect()  # result must stay usable after the internal releases
-    leaked = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()} - before
-    # only the returned labels' own checkpoint may remain resident
-    assert len(leaked) <= 1, leaked
-    _release_local_checkpoint(labels)
-    remaining = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()} - before
-    assert not remaining, remaining
-
-
-def test_release_local_checkpoint_counts_failures_not_plain_plans(
-    spark, monkeypatch, caplog
-):
-    # a plan with no LogicalRDD holds no checkpoint: a no-op, not a failure;
-    # a release that raises is counted and logged once, never raised
-    from types import SimpleNamespace
-
-    from kinesis_stream_spark.operators import dedup
-
-    monkeypatch.setattr(dedup, "release_failures", 0)
-    dedup._release_local_checkpoint(spark.range(3))
-    assert dedup.release_failures == 0
-
-    def broken_plan():
-        raise RuntimeError("py4j went away")
-
-    broken = SimpleNamespace(_jdf=SimpleNamespace(queryExecution=broken_plan))
-    with caplog.at_level("WARNING", logger=dedup.__name__):
-        dedup._release_local_checkpoint(broken)
-        dedup._release_local_checkpoint(broken)
-    assert dedup.release_failures == 2
-    warnings = [r for r in caplog.records if r.name == dedup.__name__]
-    assert len(warnings) == 1
-
-    # the count is exact when many threads fail at once
-    import sys
-    import threading
-
-    monkeypatch.setattr(dedup, "release_failures", 0)
-    n_threads, n_calls = 16, 200
-
-    def fail_many():
-        for _ in range(n_calls):
-            dedup._release_local_checkpoint(broken)
-
-    interval = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        threads = [threading.Thread(target=fail_many) for _ in range(n_threads)]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(timeout=60)
-    finally:
-        sys.setswitchinterval(interval)
-    assert not any(t.is_alive() for t in threads)
-    assert dedup.release_failures == n_threads * n_calls
-
-
-def test_convergence_interval_one_matches_default(spark):
+def test_connected_components_two_clusters(spark):
     from kinesis_stream_spark.operators.dedup import connected_components
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long"
     )
-    every = {
-        r.v: r.comp
-        for r in connected_components(edges, convergence_check_interval=1).collect()
-    }
-    sparse = {
-        r.v: r.comp
-        for r in connected_components(edges, convergence_check_interval=3).collect()
-    }
-    assert every == sparse == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+    comp = {r.v: r.comp for r in connected_components(edges).collect()}
+    assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
 def test_exact_dedup_incremental_edges(spark):

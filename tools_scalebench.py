@@ -1,14 +1,14 @@
 #!/usr/bin/env python
-"""Scaling-measurement companion to ``bench.py`` (NOT the driver
-contract — bench.py is untouched): times a SUBSET of the declared
+"""Scaling-measurement companion to ``bench.py`` (not the driver
+contract): times a SUBSET of the declared
 queries at an arbitrary ``SPARK_GRAFT_SF_DIR`` so the heavy tail can be
 re-baselined at a larger scale factor (VERDICT r12 item 2), where a
 full 278-query run would take hours.
 
-Methodology is bench.py's, verbatim: ``local[$SPARK_GRAFT_CPUS]``,
+Methodology is bench.py's own ``time_queries``: ``local[$SPARK_GRAFT_CPUS]``,
 untimed all-table noop warm-up, fixed sorted execution order, min-of-N
 reps (default 2) of an end-to-end noop-sink materialization per query,
-gc between queries, one JSON line + a detail file.
+gc between queries; writes one JSON line + a detail file.
 
 Usage:
     SPARK_GRAFT_SF_DIR=/root/testdata_scaled/sf1 SPARK_GRAFT_CPUS=32 \
@@ -18,13 +18,13 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import gc
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from bench import bench_env, time_queries  # noqa: E402
 
 
 def main() -> None:
@@ -33,14 +33,10 @@ def main() -> None:
     ap.add_argument("--out", required=True, help="detail JSON path")
     args = ap.parse_args()
     names = [n for n in args.only.split(",") if n]
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 8)
-    os.environ["SPARK_GRAFT_CPUS"] = cpus
+    sf_dir, cpus = bench_env()
 
     from kinesis_stream_spark.queries import all_queries
     from kinesis_stream_spark.session import get_spark
-    from kinesis_stream_spark.sources.batch import TABLE_NAMES, load_table
 
     registry = all_queries()
     unknown = [n for n in names if n not in registry]
@@ -48,29 +44,9 @@ def main() -> None:
         raise SystemExit(f"unknown queries: {unknown}")
 
     spark = get_spark("kinesis-stream-spark-scalebench")
-    for t in TABLE_NAMES:
-        load_table(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
-
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
-    timings: dict[str, float] = {}
-    failures: dict[str, str] = {}
-    for name in sorted(names):
-        fn = registry[name]
-        spark.sparkContext.setJobDescription(f"scalebench: {name}")
-        best = None
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            try:
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            except Exception as exc:
-                failures[name] = f"{type(exc).__name__}: {exc}"[:200]
-                best = None
-                break
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        if best is not None:
-            timings[name] = round(best, 3)
-        gc.collect()
+    timings, failures, reps = time_queries(
+        spark, sf_dir, {n: registry[n] for n in names}
+    )
 
     detail = {
         "metric": "scaling_subset_runtime",
